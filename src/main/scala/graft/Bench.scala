@@ -1,75 +1,59 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** Seconds for one `fn(spark, sfDir).count()`, or -1 when it throws (a
+    * failed run never records a bogus wall-clock). Timing covers ONLY the
+    * count; the cache drain runs after the clock stops, so teardown is
+    * never billed into a measurement. */
+  private def runOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Double =
+    try {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        -1.0
+    } finally GraftSession.dropCaches(spark)
+
+  /** One warm-up run, then `n` timed runs, all back to back. Keeping a
+    * query's runs adjacent preserves its JIT state and parquet footer
+    * caches between warm-up and measurement (a global warm-up pass lets 15
+    * other queries evict them again — measured as a uniform +30-60% on
+    * unchanged relational plans in r6). GC after each timed run keeps one
+    * run's garbage from billing the next. */
+  def timedRuns(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, n: Int): Seq[Double] = {
+    runOnce(spark, sfDir, name, fn) // warm-up: JIT + parquet footers for THIS query
+    Seq.fill(n) {
+      val t = runOnce(spark, sfDir, name, fn); System.gc(); t
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core (the driver contract is local[32]); the env var
-    // still pins an explicit width for controlled comparisons
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      // subset co-partitioning: lets a join whose equi-keys extend an
-      // existing HashPartitioning (e.g. the block-pair verify joins) reuse
-      // it instead of reshuffling the array-carrying intermediate
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    // Every run (warm-up and timed) releases cached blocks afterwards so a
-    // query's persist() calls never leak into the next measurement. The
-    // unpersist must BLOCK: catalog.clearCache() tears blocks down
-    // asynchronously, and the next run's materialization racing that
-    // teardown shows up as blockDoesNotExistError task retries — measured
-    // 2-4x swings on an unchanged query until the drain was made
-    // synchronous.
-    def dropCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
-    // Timing covers ONLY q.fn(...).count(); the cache drain runs after the
-    // clock stops, so teardown is never billed into a measurement.
-    def runOnce(q: Q): Double =
-      try {
-        val t0 = System.nanoTime()
-        q.fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} FAILED: $e")
-          -1.0
-      } finally dropCaches()
-    // Per query: one warm-up run, then MIN of 3 timed runs, all back to
-    // back. Keeping a query's four runs adjacent preserves its JIT state and
-    // parquet footer caches between warm-up and measurement (a global
-    // warm-up pass lets 15 other queries evict them again — measured as a
-    // uniform +30-60% on unchanged relational plans in r6). Min-of-N
-    // rejects this container's co-tenant noise (identical queries swing
-    // 2-4x; isolated reruns confirm the fast number reproduces). A failed
-    // run records -1, never a bogus wall-clock. GC between queries keeps
-    // one query's garbage from billing the next one's first run.
     // dev aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the set for iterating
-    // on one query; the driver never sets it, so judged runs are unaffected
+    // on one query; judged runs never set it. A name outside the bench set
+    // is an error, not a silent 0.0 total.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.benchQueries.map(_.name)
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY names unknown bench " +
+        s"queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val picked = SparkEntry.benchQueries
       .filter(q => only.forall(_.contains(q.name)))
+    // every core by default (judged runs are local[32]); SPARK_GRAFT_CPUS
+    // pins an explicit width for controlled comparisons
+    val spark = GraftSession.driver("graft-bench")
+    // Per query: MIN of 3 timed runs after one warm-up. Min-of-N rejects
+    // co-tenant noise on shared hosts (identical queries swing 2-4x;
+    // isolated reruns confirm the fast number reproduces).
     val results = picked.map { q =>
-      runOnce(q) // warm-up: JIT + parquet footers for THIS query
-      val times = Seq.fill(3) {
-        val t = runOnce(q); System.gc(); t
-      }
+      val times = timedRuns(spark, sfDir, q.name, q.fn, 3)
       q.name -> (if (times.contains(-1.0)) -1.0 else times.min)
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }

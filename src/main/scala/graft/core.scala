@@ -46,19 +46,38 @@ object Tables {
     * `withWatermark` rejects NTZ event time, so the streaming loader
     * (StreamOps.eventsStream) applies the same normalization. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadedTables.computeIfAbsent((spark, dir, name), _ => {
+    memoOf(spark).tables.computeIfAbsent((dir, name), _ => {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") normalizeEventTs(df) else df
     })
 
-  /** Per-(session, dir, table) memo of the loaded DataFrame: every
+  /** Per-(dir, table) memo of the loaded DataFrame: every
     * `spark.read.parquet` re-runs driver-side schema inference (~0.1-0.15 s
     * per table at sf0.1), and nearly every judged query loads 1-3 tables
     * per run. The DataFrame is an immutable logical plan over an immutable
     * dataset file, so reuse is exact; transformations derive new plans and
-    * never mutate the memoized one. */
-  private val loadedTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    * never mutate the memoized one. `registeredDir` is the dataset dir
+    * whose views [[registerAll]] last created.
+    *
+    * The memo serves ONE session, the last one to ask: a session that
+    * differs from the holder's replaces the whole memo, so a long-lived
+    * driver that cycles sessions keeps at most one session's plans (and
+    * through them the session) reachable. A session asking again after
+    * another starts from an empty memo — it re-reads schemas and
+    * re-creates its views, exact either way. */
+  private final class Memo(val spark: SparkSession) {
+    val tables = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    val registeredDir = new java.util.concurrent.atomic.AtomicReference[String]()
+  }
+  private val memo = new java.util.concurrent.atomic.AtomicReference(new Memo(null))
+  private def memoOf(spark: SparkSession): Memo = {
+    val m = memo.get
+    if (m.spark eq spark) m
+    else memo.updateAndGet(cur => if (cur.spark eq spark) cur else new Memo(spark))
+  }
+
+  /** The session whose loads the memo currently holds (None when empty). */
+  private[graft] def memoSession: Option[SparkSession] = Option(memo.get.spark)
 
   /** ts → TimestampType across all three physical forms (see load). */
   def normalizeEventTs(df: DataFrame): DataFrame = {
@@ -73,18 +92,16 @@ object Tables {
   }
 
   /** Register every table as a temp view so spark.sql(...) queries work.
-    * Memoized per (session, dataset dir): each registration re-runs parquet
-    * schema inference for all ten tables on the driver (measured 1.9-2.6 s
-    * per repeat call at sf0.1), while the views it creates are pure
-    * functions of the immutable dataset dir — re-registering buys nothing.
-    * Nothing else in the engine creates or drops these view names
+    * Memoized per dataset dir (see [[Memo]]): each registration re-runs
+    * parquet schema inference for all ten tables on the driver (measured
+    * 1.9-2.6 s per repeat call at sf0.1), while the views it creates are
+    * pure functions of the immutable dataset dir — re-registering buys
+    * nothing. Nothing else in the engine creates or drops these view names
     * (createOrReplaceTempView appears only here). Switching dirs on the
     * same session re-registers, so the views always point at the dataset
     * last asked for. */
-  private val registeredDir =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
   def registerAll(spark: SparkSession, dir: String): Unit =
-    if (registeredDir.put(spark, dir) != dir)
+    if (memoOf(spark).registeredDir.getAndSet(dir) != dir)
       names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }
 
@@ -104,8 +121,10 @@ object Util {
   def ymdHms(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 }
 
-/** Session factory used by mains and tests: local mode sized for the
-  * container, AQE on, UTC, 32 shuffle partitions (not the 200 default). */
+/** The one SparkSession factory, used by every main, the tests and the
+  * benchmark: local mode sized for the container, AQE on, UTC, the graft
+  * planner extensions. Library and test sessions get 32 shuffle partitions
+  * (not the 200 default); the driver mains get one per core slot. */
 object GraftSession {
   /** Spark scratch (shuffle files, spills, broadcast staging) stays on the
     * JVM-default disk tmpdir unless SPARK_GRAFT_SCRATCH_DIR opts into
@@ -120,36 +139,68 @@ object GraftSession {
     sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR",
       System.getProperty("java.io.tmpdir", "/tmp"))
 
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      // subset co-partitioning: lets a join whose equi-keys extend an
-      // existing HashPartitioning (e.g. the block-pair verify joins) reuse
-      // it instead of reshuffling the array-carrying intermediate
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // storage-partitioned joins over cassandralike stores that report
-      // their token-bucket layout (Options.ReportPartitioning): same-bucket
-      // stores join with no exchange on either side; pushPartValues lets a
-      // bucket empty on one side still zip against its peer
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-  }
-  def get(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
+  /** Session width: `SPARK_GRAFT_CPUS`, else every core (at least 4). */
+  private[graft] val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+
+  /** Every setting of a graft session, master and app name included. The
+    * one difference between the two kinds of session: a driver main
+    * (Bench, Verify, TimeQuery, ExplainQuery) sizes shuffle partitions to
+    * the session width — one reduce task per core slot, the shape the
+    * judged timings are taken at — while [[builder]] keeps a fixed 32. */
+  private[graft] def settings(appName: String, driverMain: Boolean): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.app.name" -> appName,
+    "spark.sql.shuffle.partitions" -> (if (driverMain) cpus else "32"),
+    "spark.local.dir" -> localDir,
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse",
+    "spark.sql.adaptive.enabled" -> "true",
+    // subset co-partitioning: lets a join whose equi-keys extend an
+    // existing HashPartitioning (e.g. the block-pair verify joins) reuse
+    // it instead of reshuffling the array-carrying intermediate
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    // storage-partitioned joins over cassandralike stores that report
+    // their token-bucket layout (Options.ReportPartitioning): same-bucket
+    // stores join with no exchange on either side; pushPartValues lets a
+    // bucket empty on one side still zip against its peer
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.driver.host" -> "localhost")
+
+  private def builderOf(settings: Seq[(String, String)]): SparkSession.Builder =
+    settings.foldLeft(
+      SparkSession.builder().withExtensions(new graft.plans.GraftExtensions)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
+  def builder(appName: String = "graft"): SparkSession.Builder =
+    builderOf(settings(appName, driverMain = false))
+
+  def get(appName: String = "graft"): SparkSession = start(builder(appName))
+
+  /** The session of a driver main (see [[settings]]). */
+  def driver(appName: String): SparkSession =
+    start(builderOf(settings(appName, driverMain = true)))
+
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
     graft.plans.CoBucketedWrite.install(s)
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Release every cached block before the next query runs, so one
+    * query's persist() calls never leak into the next. The unpersist must
+    * BLOCK: catalog.clearCache() tears blocks down asynchronously, and the
+    * next run's materialization racing that teardown shows up as
+    * blockDoesNotExistError task retries — measured 2-4x swings on an
+    * unchanged query until the drain was made synchronous. */
+  def dropCaches(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
   }
 }

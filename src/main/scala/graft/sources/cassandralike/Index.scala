@@ -406,7 +406,9 @@ object Index {
     // with a run-index seek + bloom probes + a span walk per overlapping
     // run, while the full scan streams every cell once — past the
     // totalCells/pointCost crossover the shrunk job LOSES to the scan it
-    // avoids (IndexedAggProbe sweep arm). Abandon the index there: same
+    // avoids (sweep arm of graft.tools.IndexedAggProbe, last present in
+    // c93a5c1; crossover ≈300 cells/candidate, see
+    // Options.DefaultIndexPointCostCells). Abandon the index there: same
     // rows either way — the pushed predicates are re-applied row-level by
     // the readers (absorbed) or by Spark (residual).
     if (pointCost > 0 && cands.size.toLong > totalCells / pointCost)
